@@ -17,7 +17,7 @@ co-citation is non-trivial).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
@@ -185,7 +185,10 @@ def pagerank(
     # AND ordering (unlike localCheckpoint, whose ExistingRDD scan
     # forgets both — probed on pyspark 4.1), so each iteration's
     # sort-merge join exchanges/sorts only the ranks side. Measured at
-    # sf0.1: ~25-30% off the 6-iteration wall time.
+    # sf0.1: ~25-30% off the 6-iteration wall time. Below AQE's
+    # broadcast threshold (the benchmark's sf0.001 edge list, for one)
+    # the planner broadcasts this cached side instead, every round, and
+    # the layout buys nothing; it pays once the edges outgrow it.
     #
     # out_deg rides INSIDE the edge layout (a window count over the
     # same partitioning — no join, no extra shuffle), and each rank
@@ -225,10 +228,11 @@ def pagerank(
     for _ in range(iterations):
         # Dangling mass as a LAZY 1-row aggregate folded in via a
         # broadcast crossJoin (the q22 lazy-scalar pattern,
-        # relational.py) — no driver-side collect per iteration: the
-        # whole iteration is ONE job, and at 100 TB the dangling sum
-        # rides the same pass instead of costing an extra full scan of
-        # the ranks per iteration.
+        # relational.py) — no driver-side collect per iteration. It is
+        # NOT one job: the aggregate, the broadcasts, the two shuffles
+        # and the checkpoint each run as their own job under AQE, about
+        # 7 per iteration; :func:`_fixed_point_rounds` shows the 3-job
+        # round this float reference does not need.
         dangling = (
             ranks.filter(F.col("is_dangling"))
             .select(
@@ -1203,6 +1207,168 @@ def citation_scc_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
 _FP_SCALE = 10**15
 
 
+def _checkpoint(df: DataFrame, *metrics) -> tuple[DataFrame, dict]:
+    """``localCheckpoint`` ``df`` and return the values of ``metrics``
+    observed by the checkpoint's own action — a scalar read off the
+    pass that materialises the table, with no job of its own."""
+    obs = Observation()
+    df = df.observe(obs, *metrics).localCheckpoint()
+    return df, obs.get
+
+
+def _release(checkpointed: DataFrame) -> None:
+    """Free the blocks of a ``localCheckpoint``ed frame once nothing
+    reads it any more. No public API does: the frame's plan is a
+    LogicalRDD over the checkpointed RDD, which is unpersisted here."""
+    checkpointed._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
+def _fixed_point_rounds(
+    edges: DataFrame,
+    seeds: DataFrame | None,
+    n_seeds: int | None,
+    iterations: int,
+    scale: int,
+    d_num: int,
+    d_den: int,
+    plan_probe: list | None = None,
+) -> DataFrame:
+    """The power-iteration loop of both fixed-point PageRanks.
+
+    Teleport mass — the (1−d) share plus all dangling mass — returns
+    to every node when ``seeds`` is None, else only to the ``n_seeds``
+    seed nodes. Returns the final ``(node, rank_q, is_dangling,
+    is_seed)`` table, persisted and filled: a caller's ``clearCache``
+    (or ``unpersist``) releases it, and every other table the loop
+    cached or checkpointed is released before it returns, so a
+    drained query leaves no persisted or checkpointed RDD behind.
+
+    Each round is ONE aggregation: a zero row per node (carrying the
+    node's flags) unioned with the per-edge messages under one
+    ``groupBy(node)`` — no nodes ⟕ contribs join. A round is
+    checkpointed by one action — the rank side's broadcast or
+    shuffle, the aggregation's shuffle, the checkpoint: 3 jobs — and
+    that action also observes the round's dangling mass, which the
+    next round folds in as an exact python-int literal (no lazy
+    scalar, no crossJoin). The last round is persisted instead, so
+    its caller can release it; a persisted fill costs one job more
+    (the cache stage runs before the action that reads it).
+    """
+    if iterations < 1:
+        raise ValueError(f"iterations must be >= 1, got {iterations}")
+    # loop-invariant edge layout: one shuffle+sort on the join key,
+    # cached with partitioning/ordering intact, out_deg riding inside
+    # it via a window count — see pagerank() for the rationale, and
+    # for why small edge lists get this side broadcast instead
+    from pyspark.sql import Window
+
+    edges_w = (
+        edges.repartition(F.col("from_paper"))
+        .sortWithinPartitions("from_paper")
+        .withColumn(
+            "out_deg", F.count(F.lit(1)).over(Window.partitionBy("from_paper"))
+        )
+        .persist()
+    )
+    # node set + dangling flag in ONE aggregation: tag citer
+    # occurrences False / cited occurrences True and take min(bool)
+    # per node (false < true) — a node with any out-edge is
+    # non-dangling. Its checkpoint observes the node count and the
+    # dangling restart nodes, which fix the first round's constants.
+    nodes = (
+        edges_w.select(
+            F.col("from_paper").alias("node"), F.lit(False).alias("is_dangling")
+        )
+        .union(edges_w.select("to_paper", F.lit(True)))
+        .groupBy("node")
+        .agg(F.min("is_dangling").alias("is_dangling"))
+    )
+    if seeds is None:
+        nodes = nodes.withColumn("is_seed", F.lit(True))
+    else:
+        nodes = nodes.join(
+            seeds.select(F.col("node").alias("_s")),
+            F.col("node") == F.col("_s"),
+            "left",
+        ).select("node", "is_dangling", F.col("_s").isNotNull().alias("is_seed"))
+    nodes, seen = _checkpoint(
+        nodes,
+        F.count(F.lit(1)).alias("n"),
+        F.count_if(F.col("is_dangling") & F.col("is_seed")).alias("n_dq"),
+    )
+    n_restart = seen["n"] if seeds is None else n_seeds
+    rank0 = scale // n_restart
+    # (1-d)·scale/n as one exact python int: ((den-num)·scale // den) // n
+    base_q = ((d_den - d_num) * scale // d_den) // n_restart
+    dangling_q = rank0 * seen["n_dq"]
+    ranks = nodes.select(
+        "node",
+        F.when(F.col("is_seed"), F.lit(rank0))
+        .otherwise(F.lit(0))
+        .cast("long")
+        .alias("rank_q"),
+        "is_dangling",
+    )
+    zero = nodes.select(
+        "node", F.lit(0).cast("long").alias("v"), "is_dangling", "is_seed"
+    )
+    no_flag = F.lit(None).cast("boolean")
+    for i in range(iterations):
+        msgs = edges_w.join(
+            ranks.filter(~F.col("is_dangling")), edges_w.from_paper == F.col("node")
+        ).select(
+            F.col("to_paper").alias("node"),
+            F.expr("rank_q div out_deg").alias("v"),
+            no_flag.alias("is_dangling"),
+            no_flag.alias("is_seed"),
+        )
+        # same integer association as the oracle: the (1-d) share and
+        # the dangling share are floored per term, then + (d·in_q) div den
+        restart_q = base_q + ((d_num * dangling_q) // d_den) // n_restart
+        stepped = (
+            zero.union(msgs)
+            .groupBy("node")
+            .agg(
+                F.sum("v").alias("in_q"),
+                F.max("is_dangling").alias("is_dangling"),
+                F.max("is_seed").alias("is_seed"),
+            )
+            .select(
+                "node",
+                (
+                    F.when(F.col("is_seed"), F.lit(restart_q)).otherwise(F.lit(0))
+                    + F.expr(f"({d_num} * in_q) div {d_den}")
+                )
+                .cast("long")
+                .alias("rank_q"),
+                "is_dangling",
+                "is_seed",
+            )
+        )
+        if plan_probe is not None:
+            # the returned table reads a cache, so plan pins (e.g.
+            # no-collect_list) must observe each round's own plan — to
+            # explain only: the checkpoints it reads are released below
+            plan_probe.append(stepped)
+        prev = ranks
+        if i + 1 < iterations:
+            ranks, seen = _checkpoint(
+                stepped,
+                F.coalesce(
+                    F.sum(F.when(F.col("is_dangling"), F.col("rank_q"))), F.lit(0)
+                ).alias("dq"),
+            )
+            dangling_q = seen["dq"]
+        else:
+            ranks = stepped.persist()
+            ranks.write.format("noop").mode("overwrite").save()
+        if i:
+            _release(prev)
+    _release(nodes)
+    edges_w.unpersist()
+    return ranks
+
+
 def pagerank_fixed_point(
     edges: DataFrame,
     iterations: int = 8,
@@ -1234,89 +1400,11 @@ def pagerank_fixed_point(
     (pinned in pytest) while the DuckDB oracle replays the integer
     algorithm hash-exactly. All operands are nonnegative, so Spark's
     ``div`` (truncate toward zero) and DuckDB's ``//`` (floor) agree.
+    The loop itself is :func:`_fixed_point_rounds`.
     """
-    # loop-invariant edge layout: one shuffle+sort on the join key,
-    # cached with partitioning/ordering intact, out_deg riding inside
-    # it via a window count and is_dangling riding inside the rank
-    # rows — see pagerank() for the rationale and measured wins
-    from pyspark.sql import Window
-
-    edges_w = (
-        edges.repartition(F.col("from_paper"))
-        .sortWithinPartitions("from_paper")
-        .withColumn(
-            "out_deg", F.count(F.lit(1)).over(Window.partitionBy("from_paper"))
-        )
-        .persist()
-    )
-    # node set + dangling flag in ONE aggregation: tag citer
-    # occurrences False / cited occurrences True and take min(bool)
-    # per node (false < true) — a node with any out-edge is
-    # non-dangling. Replaces distinct-union + distinct + join.
-    nodes = (
-        edges_w.select(
-            F.col("from_paper").alias("node"),
-            F.lit(False).alias("is_dangling"),
-        )
-        .union(edges_w.select("to_paper", F.lit(True)))
-        .groupBy("node")
-        .agg(F.min("is_dangling").alias("is_dangling"))
-        .localCheckpoint()
-    )
-    n_total = nodes.count()
-    # (1-d)·scale/n as one exact python int: ((den-num)·scale // den) // n
-    base1 = ((d_den - d_num) * scale // d_den) // n_total
-    ranks = nodes.select(
-        "node", F.lit(scale // n_total).cast("long").alias("rank_q"), "is_dangling"
-    )
-    for _ in range(iterations):
-        # lazy 1-row dangling fold, same shape as pagerank(): BIGINT
-        # sum needs no ordering discipline at all
-        dangling = (
-            ranks.filter(F.col("is_dangling"))
-            .agg(
-                F.coalesce(F.sum("rank_q"), F.lit(0))
-                .cast("long")
-                .alias("_dangling_q")
-            )
-        )
-        contribs = (
-            edges_w.join(
-                ranks.filter(~F.col("is_dangling")),
-                edges_w.from_paper == F.col("node"),
-            )
-            .select(
-                F.col("to_paper").alias("node"),
-                F.expr("rank_q div out_deg").alias("v"),
-            )
-            .groupBy("node")
-            .agg(F.sum("v").cast("long").alias("in_q"))
-        )
-        stepped = (
-            nodes.join(contribs, "node", "left")
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "node",
-                (
-                    F.lit(base1)
-                    + F.expr(
-                        f"(({d_num} * _dangling_q) div {d_den}) div {n_total}"
-                    )
-                    + F.expr(f"({d_num} * coalesce(in_q, 0L)) div {d_den}")
-                )
-                .cast("long")
-                .alias("rank_q"),
-                "is_dangling",
-            )
-        )
-        if plan_probe is not None:
-            # the returned table's lineage is checkpoint-truncated, so
-            # plan pins (e.g. no-collect_list) must observe the
-            # PRE-checkpoint iteration plan — the one each job runs
-            plan_probe.append(stepped)
-        ranks = stepped.localCheckpoint()
-    edges_w.unpersist()
-    return ranks.select("node", "rank_q")
+    return _fixed_point_rounds(
+        edges, None, None, iterations, scale, d_num, d_den, plan_probe
+    ).select("node", "rank_q")
 
 
 def _pagerank_fp_oracle(
@@ -1702,72 +1790,12 @@ def personalized_pagerank_fixed_point(
     the seed set (the "related items" query). ``und`` is a directed
     edge list (``from_paper`` → ``to_paper``); ``seeds`` is a
     bounded (node) table. All-BIGINT arithmetic — associative sums,
-    map-side combine, bit-identical under any partitioning."""
-    from pyspark.sql import Window
-
-    edges_w = (
-        und.repartition(F.col("from_paper"))
-        .sortWithinPartitions("from_paper")
-        .withColumn(
-            "out_deg", F.count(F.lit(1)).over(Window.partitionBy("from_paper"))
-        )
-        .persist()
-    )
-    nodes = (
-        edges_w.select(F.col("from_paper").alias("node"),
-                       F.lit(False).alias("is_dangling"))
-        .union(edges_w.select("to_paper", F.lit(True)))
-        .groupBy("node")
-        .agg(F.min("is_dangling").alias("is_dangling"))
-        .join(seeds.select(F.col("node").alias("_s")),
-              F.col("node") == F.col("_s"), "left")
-        .select("node", "is_dangling", F.col("_s").isNotNull().alias("is_seed"))
-        .localCheckpoint()
-    )
-    base_s = ((d_den - d_num) * scale // d_den) // n_seeds
-    ranks = nodes.select(
-        "node",
-        F.when(F.col("is_seed"), F.lit(scale // n_seeds))
-        .otherwise(F.lit(0)).cast("long").alias("rank_q"),
-        "is_dangling",
-        "is_seed",
-    )
-    for _ in range(iterations):
-        dangling = ranks.filter(F.col("is_dangling")).agg(
-            F.coalesce(F.sum("rank_q"), F.lit(0)).cast("long").alias("_dq")
-        )
-        contribs = (
-            edges_w.join(
-                ranks.filter(~F.col("is_dangling")),
-                edges_w.from_paper == F.col("node"),
-            )
-            .select(F.col("to_paper").alias("node"),
-                    F.expr("rank_q div out_deg").alias("v"))
-            .groupBy("node")
-            .agg(F.sum("v").cast("long").alias("in_q"))
-        )
-        ranks = (
-            nodes.join(contribs, "node", "left")
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "node",
-                (
-                    F.when(
-                        F.col("is_seed"),
-                        F.lit(base_s)
-                        + F.expr(f"(({d_num} * _dq) div {d_den}) div {n_seeds}"),
-                    ).otherwise(F.lit(0))
-                    + F.expr(f"({d_num} * coalesce(in_q, 0L)) div {d_den}")
-                )
-                .cast("long")
-                .alias("rank_q"),
-                "is_dangling",
-                "is_seed",
-            )
-            .localCheckpoint()
-        )
-    edges_w.unpersist()
-    return ranks.select("node", "rank_q", "is_seed")
+    map-side combine, bit-identical under any partitioning. The loop
+    is :func:`_fixed_point_rounds`, shared with
+    :func:`pagerank_fixed_point`."""
+    return _fixed_point_rounds(
+        und, seeds, n_seeds, iterations, scale, d_num, d_den
+    ).select("node", "rank_q", "is_seed")
 
 
 _PPR_PROJ_CTES = """
@@ -1880,6 +1908,8 @@ def citation_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFram
         .select("node")
     )
     ranks = personalized_pagerank_fixed_point(und, seeds, n_seeds=2, iterations=4)
+    # the returned ranks are filled, so nothing reads the projection now
+    _release(proj)
     return (
         ranks.orderBy(F.col("rank_q").desc(), F.col("node").asc())
         .limit(20)

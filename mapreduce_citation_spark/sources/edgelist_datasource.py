@@ -17,15 +17,28 @@ property-tested across adversarial split layouts in
 Parsing applies the reference's scan semantics (ops #1-4): trim,
 drop blank lines and ``#`` comments, split on the separator, drop
 rows without exactly two non-empty fields (the ``malformed="drop"``
-policy of ``readers.read_edges_text``).
+policy of ``readers.read_edges_text``). :func:`parse_edges` applies
+them to a whole block of lines at once with pyarrow compute kernels,
+and both readers yield its ``pyarrow.RecordBatch``es, which pyspark
+hands to the JVM as they are — no python object per row on either
+side of the crossing.
+
+Without a ``splits`` option a file is cut into as many ranges as
+Spark's own file scan would cut it (``FilePartition.maxSplitBytes``:
+``spark.sql.files.maxPartitionBytes``, ``openCostInBytes`` and the
+session's parallelism, read when the source is registered).
 """
 
 from __future__ import annotations
 
+import math
 import os
-
+import re
 from dataclasses import dataclass
+from itertools import islice
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
@@ -38,6 +51,100 @@ from pyspark.sql.datasource import (
 )
 
 
+_EDGE_ARROW_SCHEMA = pa.schema([("from_paper", pa.string()), ("to_paper", pa.string())])
+
+#: bytes parsed per batch: bounds a reader's memory on any range size
+_BLOCK_BYTES = 4 << 20
+
+
+def parse_edges(data: bytes, sep: str, comment: str, pushed=()) -> pa.RecordBatch:
+    """Parse a block of whole lines into one ``(from_paper, to_paper)``
+    batch: decode (invalid UTF-8 replaced), trim each line as
+    ``str.strip()`` does, drop blank and ``comment`` lines, split on
+    ``sep``, keep lines with exactly two non-empty fields, then apply
+    the ``pushed`` ``(column index, "eq" | "prefix", value)`` filters.
+    Every step is one pyarrow kernel over the whole block."""
+    text = data.decode("utf-8", errors="replace")
+    lines = pc.split_pattern(pa.array([text]), "\n").flatten()
+    lines = pc.utf8_trim_whitespace(lines)  # the same set str.strip() trims
+    lines = lines.filter(
+        pc.and_(pc.not_equal(lines, ""), pc.invert(pc.starts_with(lines, comment)))
+    )
+    fields = pc.split_pattern(lines, sep)
+    fields = fields.filter(pc.equal(pc.list_value_length(fields), 2))
+    cols = [pc.list_element(fields, 0), pc.list_element(fields, 1)]
+    keep = pc.and_(pc.not_equal(cols[0], ""), pc.not_equal(cols[1], ""))
+    for idx, kind, val in pushed:
+        hit = pc.equal(cols[idx], val) if kind == "eq" else pc.starts_with(cols[idx], val)
+        keep = pc.and_(keep, hit)
+    return pa.RecordBatch.from_arrays(
+        [c.filter(keep) for c in cols], schema=_EDGE_ARROW_SCHEMA
+    )
+
+
+def _range_blocks(f, start: int, end: int):
+    """Blocks of the whole lines whose FIRST byte lies in
+    ``[start, end)`` (Hadoop's LineRecordReader rule): the line holding
+    byte ``start - 1`` belongs to the previous range, and a line that
+    starts before ``end`` is read to its end, past ``end`` if need be."""
+    if start > 0:
+        f.seek(start - 1)
+        f.readline()  # owned by the previous range
+    pos = f.tell()
+    while pos < end:
+        block = f.read(min(_BLOCK_BYTES, end - pos))
+        if not block:
+            return
+        if not block.endswith(b"\n"):
+            block += f.readline()  # the last line started inside the range
+        pos = f.tell()
+        yield block
+
+
+_BYTE_UNITS = {"": 1, "b": 1, "k": 1 << 10, "kb": 1 << 10, "m": 1 << 20,
+               "mb": 1 << 20, "g": 1 << 30, "gb": 1 << 30, "t": 1 << 40,
+               "tb": 1 << 40, "p": 1 << 50, "pb": 1 << 50}
+
+
+def _conf_bytes(value: str) -> int:
+    """A Spark byte-size conf (``"134217728"``, ``"4MB"``, ``"128m"``)."""
+    m = re.fullmatch(r"\s*(\d+)\s*([a-zA-Z]*)\s*", value)
+    if not m or m.group(2).lower() not in _BYTE_UNITS:
+        raise ValueError(f"not a byte size: {value!r}")
+    return int(m.group(1)) * _BYTE_UNITS[m.group(2).lower()]
+
+
+@dataclass(frozen=True)
+class SplitSizing:
+    """The inputs of Spark's ``FilePartition.maxSplitBytes``."""
+
+    max_partition_bytes: int = 128 << 20
+    open_cost_bytes: int = 4 << 20
+    parallelism: int = os.cpu_count() or 1
+
+    @classmethod
+    def of(cls, spark) -> "SplitSizing":
+        conf = spark.conf
+        parallelism = (
+            conf.get("spark.sql.files.minPartitionNum", None)
+            or conf.get("spark.sql.leafNodeDefaultParallelism", None)
+            or spark.sparkContext.defaultParallelism
+        )
+        return cls(
+            _conf_bytes(conf.get("spark.sql.files.maxPartitionBytes")),
+            _conf_bytes(conf.get("spark.sql.files.openCostInBytes")),
+            int(parallelism),
+        )
+
+    def split_bytes(self, sizes: list[int]) -> int:
+        """Bytes per range: the total (each file plus its open cost)
+        spread over the parallelism, clamped to
+        ``[open cost, max partition bytes]``."""
+        total = sum(size + self.open_cost_bytes for size in sizes)
+        per_core = total // max(1, self.parallelism)
+        return min(self.max_partition_bytes, max(self.open_cost_bytes, per_core))
+
+
 class EdgeRangePartition(InputPartition):
     def __init__(self, path: str, start: int, end: int):
         self.path = path
@@ -46,13 +153,16 @@ class EdgeRangePartition(InputPartition):
 
 
 class EdgeListReader(DataSourceReader):
-    def __init__(self, options: dict):
+    def __init__(self, options: dict, sizing: SplitSizing = SplitSizing()):
         self.path = options.get("path")
         if not self.path:
             raise ValueError("edgelist source requires a path")
         self.sep = options.get("sep", "\t")
         self.comment = options.get("comment", "#")
-        self.splits = int(options.get("splits", "8"))
+        # an explicit split count is exact; without one, ranges are
+        # sized as Spark sizes file splits
+        self.splits = int(options["splits"]) if "splits" in options else None
+        self.sizing = sizing
         self.pushed = []  # (col_idx, kind, value) applied during scan
 
     def pushFilters(self, filters):
@@ -75,15 +185,6 @@ class EdgeListReader(DataSourceReader):
             else:
                 yield f
 
-    def _keep(self, row) -> bool:
-        for idx, kind, val in self.pushed:
-            v = row[idx]
-            if kind == "eq" and v != val:
-                return False
-            if kind == "prefix" and not v.startswith(val):
-                return False
-        return True
-
     def _files(self) -> list[str]:
         if os.path.isdir(self.path):
             return sorted(
@@ -95,11 +196,15 @@ class EdgeListReader(DataSourceReader):
 
     def partitions(self):
         parts = []
-        for path in self._files():
-            size = os.path.getsize(path)
+        files = [(path, os.path.getsize(path)) for path in self._files()]
+        split_bytes = self.sizing.split_bytes([size for _, size in files])
+        for path, size in files:
             if size == 0:
                 continue
-            n = min(self.splits, size)
+            if self.splits is None:
+                n = math.ceil(size / split_bytes)
+            else:
+                n = min(self.splits, size)
             step = size // n
             bounds = [i * step for i in range(n)] + [size]
             parts.extend(
@@ -118,30 +223,18 @@ class EdgeListReader(DataSourceReader):
     def read(self, partition: EdgeRangePartition):
         if partition.path is None:  # empty-directory sentinel
             return
-        sep, comment = self.sep, self.comment
         with open(partition.path, "rb") as f:
-            if partition.start > 0:
-                f.seek(partition.start - 1)
-                f.readline()  # owned by the previous range
-            while True:
-                pos = f.tell()
-                if pos >= partition.end:
-                    break
-                raw = f.readline()
-                if not raw:
-                    break
-                line = raw.decode("utf-8", errors="replace").strip()
-                if not line or line.startswith(comment):
-                    continue
-                fields = line.split(sep)
-                if len(fields) != 2 or not fields[0] or not fields[1]:
-                    continue  # malformed="drop" (reference mapper.py:74-80)
-                row = (fields[0], fields[1])
-                if self._keep(row):
-                    yield row
+            for block in _range_blocks(f, partition.start, partition.end):
+                batch = parse_edges(block, self.sep, self.comment, self.pushed)
+                if batch.num_rows:
+                    yield batch
 
 
 class EdgeListDataSource(DataSource):
+    #: range sizing for reads without a ``splits`` option; the class
+    #: :func:`register_edgelist_source` registers carries the session's
+    sizing = SplitSizing()
+
     @classmethod
     def name(cls) -> str:
         return "edgelist"
@@ -150,7 +243,7 @@ class EdgeListDataSource(DataSource):
         return "from_paper string, to_paper string"
 
     def reader(self, schema) -> EdgeListReader:
-        return EdgeListReader(self.options)
+        return EdgeListReader(self.options, self.sizing)
 
     def simpleStreamReader(self, schema):
         return EdgeListSimpleStreamReader(self.options)
@@ -160,25 +253,19 @@ class EdgeListDataSource(DataSource):
 
 
 def register_edgelist_source(spark) -> None:
-    """Idempotently register the ``edgelist`` format on a session,
-    enabling python-source filter pushdown (off by default in Spark
-    4.1; only python data sources are affected by the flag)."""
+    """Register the ``edgelist`` format on a session, enabling
+    python-source filter pushdown (off by default in Spark 4.1; only
+    python data sources are affected by the flag). The registered class
+    carries the session's file-split settings, because the python
+    workers that plan a read see no session. Registering again
+    replaces the earlier class, so it picks up changed settings."""
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    try:
-        spark.dataSource.register(EdgeListDataSource)
-    except Exception as e:  # already registered in this session
-        if "already" not in str(e).lower():
-            raise
-
-
-def _parse_edge_line(raw: bytes, sep: str, comment: str):
-    line = raw.decode("utf-8", errors="replace").strip()
-    if not line or line.startswith(comment):
-        return None
-    fields = line.split(sep)
-    if len(fields) != 2 or not fields[0] or not fields[1]:
-        return None
-    return (fields[0], fields[1])
+    source = type(
+        EdgeListDataSource.__name__,
+        (EdgeListDataSource,),
+        {"sizing": SplitSizing.of(spark)},
+    )
+    spark.dataSource.register(source)
 
 
 class EdgeListSimpleStreamReader(SimpleDataSourceStreamReader):
@@ -203,26 +290,20 @@ class EdgeListSimpleStreamReader(SimpleDataSourceStreamReader):
         return {"line": 0}
 
     def _read_lines(self, start_line: int, max_lines: int):
-        rows, n = [], 0
+        """The batches parsed from raw lines ``[start_line,
+        start_line + max_lines)``, and the line index after them."""
         with open(self.path, "rb") as f:
-            for i, raw in enumerate(f):
-                if i < start_line:
-                    continue
-                if n >= max_lines:
-                    break
-                n += 1
-                parsed = _parse_edge_line(raw, self.sep, self.comment)
-                if parsed is not None:
-                    rows.append(parsed)
-        return rows, start_line + n
+            lines = list(islice(f, start_line, start_line + max_lines))
+        batch = parse_edges(b"".join(lines), self.sep, self.comment)
+        return ([batch] if batch.num_rows else []), start_line + len(lines)
 
     def read(self, start: dict):
-        rows, end_line = self._read_lines(start["line"], self.batch_lines)
-        return iter(rows), {"line": end_line}
+        batches, end_line = self._read_lines(start["line"], self.batch_lines)
+        return iter(batches), {"line": end_line}
 
     def readBetweenOffsets(self, start: dict, end: dict):
-        rows, _ = self._read_lines(start["line"], end["line"] - start["line"])
-        return iter(rows)
+        batches, _ = self._read_lines(start["line"], end["line"] - start["line"])
+        return iter(batches)
 
 
 @dataclass

@@ -277,6 +277,47 @@ def test_pagerank_flagship_plan_has_no_listfold(spark):
         assert "HashAggregate" in plan
 
 
+def test_pagerank_round_adds_at_most_three_jobs(spark):
+    """Each fixed-point round is one aggregation, checkpointed by one
+    action that also observes the round's dangling mass: an extra
+    round may add at most 3 Spark jobs (it was about 7)."""
+    from mapreduce_citation_spark.operators.graph import pagerank_fixed_point
+
+    edges = [("a", "b"), ("b", "c"), ("c", "a"), ("d", "c"), ("a", "e")]
+    df = spark.createDataFrame(edges, ["from_paper", "to_paper"])
+    tracker = spark.sparkContext.statusTracker()
+
+    def jobs(iterations):
+        before = set(tracker.getJobIdsForGroup(None))
+        pagerank_fixed_point(df, iterations=iterations).collect()
+        return len(set(tracker.getJobIdsForGroup(None)) - before)
+
+    assert jobs(3) - jobs(2) <= 3
+    with pytest.raises(ValueError, match="iterations"):
+        pagerank_fixed_point(df, iterations=0)
+
+
+@pytest.mark.parametrize(
+    "query", ["citation_pagerank", "citation_personalized_pagerank"]
+)
+def test_pagerank_queries_leave_no_persisted_rdds(spark, sf_dir, query):
+    """A drained PageRank query leaves nothing behind once the cache is
+    cleared: no persisted frame and no checkpoint block."""
+    from mapreduce_citation_spark.registry import queries
+
+    sc = spark.sparkContext
+
+    def persistent():
+        return set(sc._jsc.getPersistentRDDs().keys())
+
+    spark.catalog.clearCache()
+    before = persistent()
+    rows = queries()[query](spark, sf_dir).collect()
+    assert len(rows) == 20
+    spark.catalog.clearCache()
+    assert persistent() - before == set()
+
+
 def test_triangle_counts_on_planted_graph(spark):
     """Degree-oriented triangle counting on a hand-built graph whose
     truth is known: K4 (4 triangles, every node in 3), a 5-leaf star

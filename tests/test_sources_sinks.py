@@ -341,7 +341,12 @@ def test_edgelist_reader_filter_pushdown(spark, tmp_path):
         )
     )
     assert leftover == [] and len(r.pushed) == 2
-    rows = [row for part in r.partitions() for row in r.read(part)]
+    rows = [
+        (row["from_paper"], row["to_paper"])
+        for part in r.partitions()
+        for batch in r.read(part)
+        for row in batch.to_pylist()
+    ]
     assert rows and all(a == "k3" and b.startswith("v") for a, b in rows)
 
     # end to end: after pushdown the Spark-side Filter keeps only
@@ -360,6 +365,67 @@ def test_edgelist_reader_filter_pushdown(spark, tmp_path):
         if i % 10 == 3 and i % 4 == 1
     )
     assert got == want
+
+
+def test_edgelist_default_splits_follow_spark_split_sizing(spark, tmp_path):
+    """Without a ``splits`` option the range count is Spark's own file
+    split rule (maxSplitBytes from maxPartitionBytes, openCostInBytes
+    and parallelism); every layout reads the same rows."""
+    from mapreduce_citation_spark.sources.edgelist_datasource import (
+        EdgeListReader,
+        SplitSizing,
+        register_edgelist_source,
+    )
+
+    p = tmp_path / "sized_edges.txt"
+    p.write_text("".join(f"s{i}\td{i % 7}\n" for i in range(1000)))
+    size = p.stat().st_size
+    assert size > 3 * 2048
+
+    def rows(reader):
+        return sorted(
+            (row["from_paper"], row["to_paper"])
+            for part in reader.partitions()
+            for batch in reader.read(part)
+            for row in batch.to_pylist()
+        )
+
+    # (size + 512) / 2 cores > 2048 = max partition bytes → ranges of 2048
+    sized = EdgeListReader({"path": str(p)}, SplitSizing(2048, 512, 2))
+    assert len(sized.partitions()) == -(-size // 2048) >= 4
+    # the open cost dominates a small file: one range
+    one = EdgeListReader({"path": str(p)}, SplitSizing(1 << 20, 1 << 16, 4))
+    assert len(one.partitions()) == 1
+    assert rows(sized) == rows(one) == sorted((f"s{i}", f"d{i % 7}") for i in range(1000))
+
+    register_edgelist_source(spark)
+    df = spark.read.format("edgelist").option("path", str(p)).load()
+    assert df.rdd.getNumPartitions() == 1  # 4 MB default open cost
+    assert df.count() == 1000
+
+
+def test_repack_checksum_hashes_every_column(tmp_path):
+    """The repack tool's faithfulness checksum must cover the whole
+    row: changing a value in a non-first column changes it, while row
+    order does not."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tools.repack_rowgroups import _checksum
+
+    base = {"k": [1, 2, 3], "v": ["x", "y", "z"], "w": [0.5, 1.5, 2.5]}
+    pq.write_table(pa.table(base), tmp_path / "a.parquet")
+    pq.write_table(pa.table({**base, "w": [0.5, 1.5, 9.5]}), tmp_path / "b.parquet")
+    pq.write_table(
+        pa.table({c: list(reversed(vals)) for c, vals in base.items()}),
+        tmp_path / "c.parquet",
+    )
+    con = duckdb.connect()
+    a, b, c = (_checksum(con, str(tmp_path / f"{n}.parquet")) for n in "abc")
+    assert a[0] == b[0] == 3
+    assert a != b
+    assert a == c
 
 
 def test_edgelist_stream_restart_resumes_from_checkpoint(spark, tmp_path):

@@ -1302,3 +1302,61 @@ def test_hard_kill_and_resume_from_checkpoint_fresh_jvm(spark, sf_dir, tmp_path)
     )
     assert rows(snap) == rows(ref)
     assert rows(snap) == rows(batch)
+
+
+class _Session:
+    """Just the ``conf.get`` the partition sizing reads."""
+
+    def __init__(self, shuffle_partitions: int):
+        self.conf = self
+        self._parts = shuffle_partitions
+
+    def get(self, key):
+        assert key == "spark.sql.shuffle.partitions"
+        return str(self._parts)
+
+
+def test_stateful_shuffle_partitions_session_cap_beats_floor(tmp_path, monkeypatch):
+    """Sized from input bytes, floored at 4 — but a session set below
+    4 partitions is a cap the floor must not break."""
+    from mapreduce_citation_spark.operators.streaming_queries import (
+        _STREAM_PART_BYTES,
+        _stateful_shuffle_partitions,
+    )
+
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", raising=False)
+    with open(tmp_path / "tiny.parquet", "wb") as f:
+        f.write(b"x" * 10)
+    with open(tmp_path / "big.parquet", "wb") as f:
+        f.truncate(6 * _STREAM_PART_BYTES)  # sparse: size without the bytes
+
+    def parts(session, table):
+        return _stateful_shuffle_partitions(_Session(session), str(tmp_path), table)
+
+    assert parts(32, "tiny.parquet") == "4"
+    assert parts(2, "tiny.parquet") == "2"
+    assert parts(1, "big.parquet") == "1"
+    assert parts(32, "big.parquet") == "6"
+    assert parts(5, "big.parquet") == "5"
+
+
+def test_stateful_shuffle_partitions_override_is_validated(tmp_path, monkeypatch):
+    """The override is a positive integer or "session"; anything else
+    fails with a message naming the variable."""
+    from mapreduce_citation_spark.operators.streaming_queries import (
+        _stateful_shuffle_partitions,
+    )
+
+    var = "SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS"
+
+    def parts():
+        return _stateful_shuffle_partitions(_Session(8), str(tmp_path), "t.parquet")
+
+    monkeypatch.setenv(var, "12")
+    assert parts() == "12"
+    monkeypatch.setenv(var, "session")
+    assert parts() is None
+    for bad in ("lots", "0", "-3", "2.5"):
+        monkeypatch.setenv(var, bad)
+        with pytest.raises(ValueError, match=var):
+            parts()
